@@ -9,9 +9,10 @@ state dir is an object-store URI (``s3a://…``, ``hdfs://…``) right next
 to the parquet it fences.  The ANN manifest
 (operators/ann_maintenance.py) has always gone through Hadoop's
 FileSystem API for exactly that reason; this module is that plumbing
-promoted to a shared home so the rollup, dedup, CDC-state and
-shard-writer sinks resolve their state through the SAME filesystem
-abstraction their data writes use (scheme-qualified URIs and
+promoted to a shared home so the versioned-partition store
+(streaming/store.py: CdcApplier, AdditiveRollupSink), StreamingDedup
+and stream_shard_writer resolve their state through the SAME
+filesystem abstraction their data writes use (scheme-qualified URIs and
 scheme-less local paths alike — local paths resolve against
 ``fs.defaultFS`` exactly as DataFrame reads do).
 

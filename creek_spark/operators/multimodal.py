@@ -1500,6 +1500,9 @@ def mp4_bytes(*, timescale: int = 1000, duration: int = 2500) -> bytes:
 # ---------------------------------------------------------------------
 
 
+# deflate's ceiling: one 258-byte match per 2 bits of stream
+_DEFLATE_MAX_RATIO = 1032
+
 # Adam7 interlace passes: (x0, y0, dx, dy)
 _ADAM7 = (
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
@@ -1599,8 +1602,11 @@ def decode_png_pixels(payload: bytes):
     while pos + 8 <= len(payload):
         (length,), tag = struct.unpack(">I", payload[pos:pos + 4]), payload[pos + 4:pos + 8]
         body = payload[pos + 8:pos + 8 + length]
-        if len(body) != length:
+        crc = payload[pos + 8 + length:pos + 12 + length]
+        if len(body) != length or len(crc) != 4:
             raise ValueError("truncated PNG chunk")
+        if zlib.crc32(tag + body) != struct.unpack(">I", crc)[0]:
+            raise ValueError(f"PNG {tag!r} chunk CRC mismatch")
         if tag == b"IHDR":
             if length != 13:
                 raise ValueError("malformed PNG IHDR")
@@ -1637,33 +1643,51 @@ def decode_png_pixels(payload: bytes):
         raise ValueError("empty PNG")
     ch = _PNG_CHANNELS[color_type]
     fstep = max(1, ch * bit_depth // 8)
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error as e:
-        raise ValueError(f"corrupt PNG IDAT: {e}")
 
     def stride_of(width):
         return -(-width * ch * bit_depth // 8)
 
-    samples = np.zeros((h, w, ch), dtype=np.uint8)
+    # (width, height) of each filtered sub-image, and the inflated byte
+    # count IHDR implies — checked BEFORE anything is inflated or
+    # allocated, so untrusted dimensions cannot size an allocation
+    subs = (
+        [(w, h)]
+        if interlace == 0
+        else [
+            ((w - x0 + dx - 1) // dx, (h - y0 + dy - 1) // dy)
+            for x0, y0, dx, dy in _ADAM7
+        ]
+    )
+    expected = sum(ph * (stride_of(pw) + 1) for pw, ph in subs if pw and ph)
+    data = b"".join(idat)
+    # deflate expands at most ~1032:1, so a stream this short cannot
+    # hold that many scanline bytes; the inflate itself stops one byte
+    # past the expected length
+    if expected > _DEFLATE_MAX_RATIO * len(data):
+        raise ValueError("PNG scanline length mismatch")
+    inflater = zlib.decompressobj()
+    try:
+        raw = inflater.decompress(data, expected + 1)
+    except zlib.error as e:
+        raise ValueError(f"corrupt PNG IDAT: {e}")
+    if len(raw) != expected:
+        raise ValueError("PNG scanline length mismatch")
+    if not inflater.eof:
+        raise ValueError("corrupt PNG IDAT: truncated zlib stream")
+
     if interlace == 0:
-        rows, end = _png_unfilter(raw, h, stride_of(w), fstep, 0)
-        if end != len(raw):
-            raise ValueError("PNG scanline length mismatch")
+        rows, _ = _png_unfilter(raw, h, stride_of(w), fstep, 0)
         samples = _png_unpack_samples(rows, w, ch, bit_depth)
     else:  # Adam7: 7 independently-filtered sub-images
+        samples = np.zeros((h, w, ch), dtype=np.uint8)
         off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
+        for (x0, y0, dx, dy), (pw, ph) in zip(_ADAM7, subs):
             if pw == 0 or ph == 0:
                 continue
             rows, off = _png_unfilter(raw, ph, stride_of(pw), fstep, off)
             samples[y0::dy, x0::dx] = _png_unpack_samples(
                 rows, pw, ch, bit_depth
             )
-        if off != len(raw):
-            raise ValueError("PNG scanline length mismatch")
 
     if color_type == 3:
         idx = samples[:, :, 0]

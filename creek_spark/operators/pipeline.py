@@ -570,32 +570,18 @@ def stream_shard_writer(
 
     def _write(df: DataFrame, batch_id: int) -> None:
         from creek_spark.streaming.fence import (
-            check_on_fence,
             content_fingerprint,
+            fence_batch,
         )
 
         spark = df.sparkSession
         # first batch, or a pre-fence layout → None
-        rec = fsio.read_json_or_none(spark, fence_file)
-        if rec is not None:
-            if batch_id == rec["last_batch_id"]:
-                check_on_fence(
-                    df, rec.get("fence_print"), batch_id=batch_id,
-                    sink="stream_shard_writer", state_path=path,
-                )
-                return  # genuine replay: the batch dir already has it
-            if batch_id < rec["last_batch_id"]:
-                raise ValueError(
-                    f"batch id {batch_id} is below stream_shard_writer's "
-                    f"committed fence (last_batch_id="
-                    f"{rec['last_batch_id']}) at {path}: triggers "
-                    "serialize, so this cannot be a Spark replay — the "
-                    "stream was restarted with a reset or relocated "
-                    "checkpoint, and overwriting batch dirs under "
-                    "recycled ids would silently REPLACE committed "
-                    "shards; resume from the original "
-                    "checkpointLocation, or export to a fresh path"
-                )
+        rec = fsio.read_json_or_none(spark, fence_file) or {}
+        if fence_batch(
+            df, rec.get("last_batch_id"), rec.get("fence_print"),
+            batch_id=batch_id, sink="stream_shard_writer", state_path=path,
+        ):
+            return  # genuine replay: the batch dir already has it
         df = df.persist()  # fingerprint + shard write: one source pass
         try:
             fence_print = content_fingerprint(df)

@@ -4,12 +4,13 @@ micro-batch is compared against EVERYTHING ingested so far (plus
 itself), then its signatures join the persisted LSH index.  Cost per
 batch ∝ batch size; the corpus is never re-shingled.
 
-State layout mirrors AdditiveRollupSink's recipe (batch_id fencing +
-atomic manifest swap): the index is an append-only set of per-batch
-band-signature parquet directories listed in ``_manifest.json``; pairs
-land under ``pairs/batch=<id>`` with overwrite semantics, so a replayed
-trigger rewrites identical content instead of duplicating it
-(at-least-once in, effectively-once out).
+State: an append-only set of per-batch band-signature parquet
+directories listed in ``_manifest.json`` beside the batch fence
+(streaming/fence.py: ``last_batch_id`` plus a content fingerprint), swapped
+atomically through ``fsio.write_json_atomic``; pairs land under
+``pairs/batch=<id>`` with overwrite semantics, so a replayed trigger
+rewrites identical content instead of duplicating it (at-least-once
+in, effectively-once out).
 
 Losslessness (tests/test_streaming_dedup.py): the union of per-batch
 candidate pairs over any batch split equals the full-corpus
@@ -72,34 +73,16 @@ class StreamingDedup:
         )
 
         from creek_spark.streaming.fence import (
-            check_on_fence,
             content_fingerprint,
+            fence_batch,
         )
 
         m = self._read_manifest()
-        if m is not None and batch_id == m["last_batch_id"]:
-            # replayed trigger — state already reflects it; the content
-            # fingerprint distinguishes a genuine replay from a reset
-            # checkpoint whose recycled id landed ON the fence
-            # (streaming/fence.py), which carries NEW rows and raises
-            check_on_fence(
-                batch, m.get("fence_print"), batch_id=batch_id,
-                sink="StreamingDedup", state_path=self.state_dir,
-            )
-            return
-        if m is not None and batch_id < m["last_batch_id"]:
-            # triggers serialize and the checkpoint commit follows this
-            # sink commit, so only the LAST batch can genuinely replay:
-            # a lower id means a reset/relocated checkpoint whose
-            # recycled ids carry NEW rows — refusing beats silently
-            # dropping them until the ids catch up
-            raise ValueError(
-                f"batch id {batch_id} is below this index's committed "
-                f"fence (last_batch_id={m['last_batch_id']}): not a Spark "
-                "replay — the stream restarted with a reset or relocated "
-                "checkpoint; resume from the original checkpointLocation "
-                "or use a fresh state_dir"
-            )
+        if fence_batch(
+            batch, (m or {}).get("last_batch_id"), (m or {}).get("fence_print"),
+            batch_id=batch_id, sink="the index", state_path=self.state_dir,
+        ):
+            return  # replayed trigger: state already reflects it
         index = self._index(m)
         if index is None:
             pairs = minhash_lsh_candidates(
@@ -185,6 +168,9 @@ class StreamingDedup:
             "last_batch_id": gen,
             "index_parts": [part],
             "stale_parts": [p for p in old_parts if p != part],
+            # the fence moves with the state: without its fingerprint a
+            # reset checkpoint landing on the fence reads as a replay
+            "fence_print": m.get("fence_print"),
         }
         fsio.write_json_atomic(
             self.spark, fsio.join(self.state_dir, _MANIFEST), manifest

@@ -1,13 +1,18 @@
-"""Content fingerprint for batch-id-fenced sinks.
+"""The batch-id fence every fenced sink applies, and its content
+fingerprint.
 
-Every fenced sink in this engine (StreamingAnnIndex, AdditiveRollupSink,
-StreamingDedup) commits a batch-id watermark: a replayed trigger
-(``batch_id == fence``) is a no-op, an id BELOW the fence raises (a
-reset/relocated checkpoint recycling ids — its batches carry NEW rows).
-That leaves one boundary the id alone cannot decide: a reset checkpoint
-whose recycled id lands EXACTLY on the fence is indistinguishable from a
-genuine replay, and its new rows would be silently no-opped — one batch
-of data loss with no error (round-11 ADVICE).
+Every fenced sink in this engine (AdditiveRollupSink, StreamingDedup,
+StreamingAnnIndex, stream_shard_writer) commits a batch-id watermark
+and decides each incoming trigger through :func:`fence_batch`: a
+replayed trigger (``batch_id == fence``) is a no-op, an id BELOW the
+fence raises (a reset/relocated checkpoint recycling ids — its batches
+carry NEW rows).  Triggers serialize and Spark's checkpoint commit
+FOLLOWS the sink commit, so only the last committed batch can
+genuinely replay.  That leaves one boundary the id alone cannot
+decide: a reset checkpoint whose recycled id lands EXACTLY on the
+fence is indistinguishable from a genuine replay, and its new rows
+would be silently no-opped — one batch of data loss with no error
+(round-11 ADVICE).
 
 The closure is a cheap order-free content fingerprint recorded beside
 the fence at every commit: row count plus the exact decimal SUM of
@@ -33,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["content_fingerprint", "check_on_fence", "FenceContentError"]
+__all__ = ["content_fingerprint", "fence_batch", "FenceContentError"]
 
 
 class FenceContentError(ValueError):
@@ -58,23 +63,43 @@ def content_fingerprint(df: DataFrame) -> dict:
     }
 
 
-def check_on_fence(
+def fence_batch(
     incoming: DataFrame,
+    committed: int | None,
     recorded: dict | None,
     *,
     batch_id: int,
     sink: str,
     state_path: str,
-) -> None:
-    """Decide the on-fence case: silently return for a genuine replay
-    (fingerprints match, or no fingerprint was recorded — a pre-upgrade
-    manifest, where the legacy no-op is the only available semantics),
-    raise :class:`FenceContentError` when the content differs."""
+) -> bool:
+    """Decide one trigger against the committed fence ``committed``
+    (None: nothing committed yet) and its recorded fingerprint.
+
+    Returns True for a genuine replay — the caller skips the batch —
+    and False for a new batch, which the caller writes and then commits
+    ``batch_id`` plus ``content_fingerprint(incoming)`` as the new
+    fence.  On the fence, a missing fingerprint (a pre-upgrade
+    manifest) keeps the legacy replay no-op, the only semantics
+    available; a differing one raises :class:`FenceContentError`.  An
+    id below the fence raises ValueError.  ``sink`` names the sink in
+    both messages ("this sink", "the index", "stream_shard_writer")."""
+    if committed is None or batch_id > committed:
+        return False
+    if batch_id < committed:
+        raise ValueError(
+            f"batch id {batch_id} is below {sink}'s committed fence "
+            f"(batch id {committed}) at {state_path}: triggers "
+            "serialize, so this cannot be a Spark replay — the stream "
+            "was restarted with a reset or relocated checkpoint whose "
+            "recycled ids carry NEW rows, which a replay no-op would "
+            "silently drop; resume from the original checkpointLocation, "
+            "or point the fresh stream at fresh state"
+        )
     if recorded is None:
-        return
+        return True
     seen = content_fingerprint(incoming)
     if seen == recorded:
-        return
+        return True
     raise FenceContentError(
         f"batch id {batch_id} equals {sink}'s committed fence at "
         f"{state_path} but its content differs from the committed batch "

@@ -179,6 +179,55 @@ def test_png_bitflip_fuzz_never_escapes():
     _flip_fuzz(decode_png_pixels, png_bytes_gradient(20, 14, seed=1), seed=21)
 
 
+def _png(ihdr: bytes, idat: bytes) -> bytes:
+    import zlib
+
+    def chunk(tag, body):
+        return (
+            struct.pack(">I", len(body)) + tag + body
+            + struct.pack(">I", zlib.crc32(tag + body))
+        )
+
+    return (
+        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat)
+        + chunk(b"IEND", b"")
+    )
+
+
+@pytest.mark.parametrize("interlace", [0, 1])
+def test_png_huge_ihdr_refused_before_allocating(monkeypatch, interlace):
+    """An IHDR claiming 2^31 rows over a 20-byte IDAT must raise
+    ValueError without sizing any array from the claimed dimensions —
+    host-independent: numpy allocations are capped here, so the check
+    does not rest on how the host's overcommit treats a lazy calloc."""
+    import zlib
+
+    cap = 1 << 24
+    for name in ("zeros", "empty", "full"):
+        orig = getattr(np, name)
+
+        def guarded(shape, *a, _orig=orig, **kw):
+            n = int(np.prod(shape, dtype=object)) if np.ndim(shape) else int(shape)
+            assert n < cap, f"allocation of {n} elements from untrusted IHDR"
+            return _orig(shape, *a, **kw)
+
+        monkeypatch.setattr(np, name, guarded)
+    idat = zlib.compress(b"\x00" * 61)
+    assert len(idat) <= 20
+    ihdr = struct.pack(">IIBBBBB", 20, 1 << 31, 8, 2, 0, 0, interlace)
+    with pytest.raises(ValueError):
+        decode_png_pixels(_png(ihdr, idat))
+
+
+def test_png_chunk_crc_verified():
+    good = png_bytes_gradient(6, 4, seed=3)
+    assert decode_png_pixels(good).shape == (4, 6, 3)
+    bad = bytearray(good)
+    bad[-5] ^= 0x01  # IEND's CRC
+    with pytest.raises(ValueError, match="CRC mismatch"):
+        decode_png_pixels(bytes(bad))
+
+
 def test_bmp_bitflip_fuzz_never_escapes():
     rng = np.random.default_rng(3)
     base = bmp_from_array(rng.integers(0, 256, (14, 20, 3), dtype=np.uint8))

@@ -77,6 +77,23 @@ def test_compact_preserves_candidates(spark, sf_dir, tmp_path):
     )
 
 
+def test_compact_keeps_the_fence_fingerprint(spark, sf_dir, tmp_path):
+    """A compaction must carry the committed fingerprint forward: after
+    it, a reset checkpoint whose recycled id lands ON the fence (id 1,
+    different rows) still refuses instead of reading as a replay."""
+    import pytest
+
+    from creek_spark.streaming.fence import FenceContentError
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text").limit(300)
+    sd = StreamingDedup(spark, str(tmp_path / "fstate"))
+    sd.apply_batch(docs.where(F.col("doc_id") % 3 == 0), 0)
+    sd.apply_batch(docs.where(F.col("doc_id") % 3 == 1), 1)
+    sd.compact()
+    with pytest.raises(FenceContentError, match="content differs"):
+        sd.apply_batch(docs.where(F.col("doc_id") % 3 == 2), 1)
+
+
 def test_crash_before_manifest_swap_is_invisible(spark, sf_dir, tmp_path):
     """A crash AFTER writing a batch's pairs/index dirs but BEFORE the
     manifest swap must leave the state logically unchanged: the next
