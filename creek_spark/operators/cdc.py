@@ -96,6 +96,7 @@ def latest_state(
     *,
     handle_toast: bool = True,
     handle_truncate: bool = True,
+    lsn_col: str | None = None,
 ) -> DataFrame:
     """Reconstruct current table state from an envelope stream (single table).
 
@@ -113,6 +114,8 @@ def latest_state(
     only add a second full shuffle on a different key set.
     TOAST columns marked unchanged (replication.go:527-528 omission) are
     carried forward from the previous row version without a second shuffle.
+    ``lsn_col`` names an extra output column holding the winning row's
+    numeric LSN — its key's stream position, at no extra shuffle.
     """
     keys = key_cols or _key_cols_from_envelope(wal)
     df = wal.withColumn("_lsn_num", lsn_num(F.col("source.lsn")))
@@ -150,6 +153,7 @@ def latest_state(
     ranked = df.withColumn("_rn", F.row_number().over(w))
 
     after_fields = [f.name for f in wal.schema["after"].dataType.fields]
+    lsn_out = [F.col("_lsn_num").alias(lsn_col)] if lsn_col else []
     if handle_toast and "unchanged_toast" in wal.columns:
         # Carry unchanged-TOAST values forward: wrap each column in a struct
         # (so a genuine NULL is distinct from "unchanged"), null the wrapper
@@ -170,11 +174,14 @@ def latest_state(
             )
         final = resolved.filter((F.col("_rn") == 1) & (F.col("op") != "d"))
         return final.select(
-            *[F.col(f"_res_{c}").getField("v").alias(c) for c in after_fields]
+            *[F.col(f"_res_{c}").getField("v").alias(c) for c in after_fields],
+            *lsn_out,
         )
 
     final = ranked.filter((F.col("_rn") == 1) & (F.col("op") != "d"))
-    return final.select(*[F.col(f"after.{c}").alias(c) for c in after_fields])
+    return final.select(
+        *[F.col(f"after.{c}").alias(c) for c in after_fields], *lsn_out
+    )
 
 
 def wal_from(wal: DataFrame, timestamp=None, lsn: str | None = None) -> DataFrame:

@@ -29,12 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from creek_spark.functions.lsn import lsn_num
+from creek_spark.functions.lsn import lsn_num, lsn_str
 from creek_spark.operators.cdc import latest_state
-from creek_spark.streaming.store import (
-    VersionedPartitionStore,
-    bounded_partition_values,
-)
+from creek_spark.streaming.store import VersionedPartitionStore
 
 
 def read_envelope_stream(
@@ -68,16 +65,6 @@ def stream_wal_from(
     return out
 
 
-def dedup_stream(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """At-least-once → effectively-once on the stream: duplicates of the
-    same (source, op) — i.e. the same LSN redelivered — collapse within a
-    bounded-state watermark window, the MsgID-dedup analog
-    (internal/mq/nats.go:214)."""
-    return stream.withWatermark("sent_at", watermark).dropDuplicatesWithinWatermark(
-        ["source", "op"]
-    )
-
-
 class CdcApplier:
     """foreachBatch sink: maintains materialized table state under
     ``state_dir`` by merging each micro-batch of envelope rows.
@@ -96,8 +83,9 @@ class CdcApplier:
     compaction fold every ``compact_versions`` generations.  On a real
     cluster the same contract is Delta MERGE + OPTIMIZE; this layout
     keeps the incremental property testable locally.  The only driver
-    traffic is two bounded collects of distinct bucket ids (≤ n_buckets
-    ints) and one manifest read per batch."""
+    traffic per batch is one aggregate row (the touched bucket ids,
+    ≤ n_buckets ints, and the batch's truncate watermark), one manifest
+    read and one listing of the new version dir."""
 
     def __init__(
         self,
@@ -131,8 +119,23 @@ class CdcApplier:
 
     def current_state(self) -> DataFrame | None:
         """The committed state as of the manifest this call reads — a
-        consistent snapshot regardless of concurrent apply_batch runs."""
-        return self._store.read(self._store.read_manifest())
+        consistent snapshot regardless of concurrent apply_batch runs.
+        Without an envelope schema the stored one is inferred."""
+        schema = (
+            self._state_schema() if self.envelope_schema is not None else None
+        )
+        return self._store.read(self._store.read_manifest(), schema=schema)
+
+    def _state_schema(self) -> T.StructType:
+        """What apply_batch writes: the envelope's ``after`` fields, the
+        key's stream position and its bucket."""
+        return T.StructType(
+            [
+                *self.envelope_schema["after"].dataType.fields,
+                T.StructField(self._lsn_col, T.StringType()),
+                T.StructField(self._bucket_col, T.IntegerType()),
+            ]
+        )
 
     def _state_as_wal(self, state: DataFrame) -> DataFrame:
         after_t = self.envelope_schema["after"].dataType
@@ -141,11 +144,10 @@ class CdcApplier:
         # schema can be WIDER than the persisted state — the reference
         # publishes a new fingerprint and keeps streaming (O10), so the
         # restarted consumer replays new-schema batches onto old-schema
-        # state.  Fields the stored rows don't have surface as typed
-        # NULLs, exactly Postgres's ADD COLUMN semantics for
-        # pre-existing rows; dropped columns fall away because only the
-        # current envelope's fields are selected.
-        have = set(state.columns)
+        # state.  ``state`` is read with the current envelope's fields
+        # (_state_schema): those the stored rows don't have surface as
+        # typed NULLs, exactly Postgres's ADD COLUMN semantics for
+        # pre-existing rows, and dropped columns are not read.
         return state.select(
             F.lit("state").alias("fingerprint"),
             F.struct(
@@ -160,25 +162,20 @@ class CdcApplier:
             F.lit("r").alias("op"),
             F.lit("1970-01-01").cast("timestamp").alias("sent_at"),
             F.lit(None).cast(before_t).alias("before"),
-            F.struct(
-                *[
-                    (F.col(f.name) if f.name in have else F.lit(None))
-                    .cast(f.dataType)
-                    .alias(f.name)
-                    for f in after_t.fields
-                ]
-            ).alias("after"),
+            F.struct(*[F.col(f.name) for f in after_t.fields]).alias("after"),
             F.lit(None).cast("array<string>").alias("unchanged_toast"),
         )
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from creek_spark.functions.lsn import lsn_str
-
         batch = batch.persist()
         try:
-            # Buckets this batch touches: the after-image key (upserts) AND
-            # the before-image key (deletes, and the delete leg of u_pk —
-            # whose old key can live in a different bucket than the new).
+            # ONE aggregate row: the buckets this batch touches — the
+            # after-image key (upserts) AND the before-image key (deletes,
+            # and the delete leg of u_pk, whose old key can live in a
+            # different bucket than the new) — and its truncate watermark,
+            # the max LSN of its 't' ops.  Bucket ids are < n_buckets, so
+            # the row is bounded by construction.  collect()[0], not
+            # first(): first() is an incremental take, three jobs.
             b_after = F.when(
                 F.col("after").isNotNull(),
                 self._bucket_of([F.col(f"after.{k}") for k in self.key_cols]),
@@ -187,16 +184,18 @@ class CdcApplier:
                 F.col("before").isNotNull(),
                 self._bucket_of([F.col(f"before.{k}") for k in self.key_cols]),
             )
-            touched = bounded_partition_values(
-                batch.select(
-                    F.explode(F.array(b_after, b_before)).alias("b")
-                ).where(F.col("b").isNotNull()),
-                "b",
-                what="CdcApplier touched buckets",
-            )
+            probe = batch.agg(
+                F.array_union(
+                    F.collect_set(b_after), F.collect_set(b_before)
+                ).alias("touched"),
+                F.max(
+                    F.when(F.col("op") == "t", lsn_num(F.col("source.lsn")))
+                ).alias("trunc_lsn"),
+            ).collect()[0]
+            touched = set(probe["touched"])
             # A truncate discards every older row in EVERY bucket.
-            has_trunc = batch.where(F.col("op") == "t").limit(1).count() > 0
-            if not (touched or has_trunc):
+            trunc_lsn = probe["trunc_lsn"]
+            if not touched and trunc_lsn is None:
                 return
             # the ONE manifest this batch reads: the merge input, the
             # next version and the publish all resolve against it
@@ -206,7 +205,7 @@ class CdcApplier:
             # version dirs (long trickle of small batches), fold the whole
             # state into this batch's version — the inline OPTIMIZE analog
             # that bounds reader-side union width.
-            if has_trunc or (
+            if trunc_lsn is not None or (
                 len(set(self._store.parts(manifest).values()))
                 >= self.compact_versions
             ):
@@ -214,38 +213,35 @@ class CdcApplier:
             if not touched:
                 return
 
-            subset = self._store.read(manifest, touched)
+            subset = self._store.read(manifest, touched, self._state_schema())
             if subset is not None:
                 sw = self._state_as_wal(subset.drop(self._bucket_col))
                 wal_in = sw.unionByName(batch.select(*sw.columns))
             else:
                 wal_in = batch
-            # per-key max LSN — stored with the state so existing rows
-            # re-enter the next batch's merge at their true stream position
-            lsn_per_key = (
-                wal_in.withColumn("_l", lsn_num(F.col("source.lsn")))
-                .groupBy(
-                    *[
-                        F.coalesce(
-                            F.col(f"after.{k}"), F.col(f"before.{k}")
-                        ).alias(k)
-                        for k in self.key_cols
-                    ]
-                )
-                .agg(F.max("_l").alias("_lmax"))
-            )
+            # latest_state's truncate watermark, as a literal: stored
+            # state enters as 'r' rows, so only the batch can carry a 't',
+            # and the probe row already holds its max LSN — no broadcast.
+            keep = F.col("op") != "t"
+            if trunc_lsn is not None:
+                keep &= lsn_num(F.col("source.lsn")) > F.lit(trunc_lsn)
+            # The winner's LSN is stored with the state so existing rows
+            # re-enter the next batch's merge at their true stream position.
             new_state = (
-                latest_state(wal_in, self.key_cols)
-                .join(lsn_per_key, self.key_cols, "left")
-                .withColumn(
-                    self._lsn_col, lsn_str(F.coalesce(F.col("_lmax"), F.lit(0)))
+                latest_state(
+                    wal_in.where(keep),
+                    self.key_cols,
+                    handle_truncate=False,
+                    lsn_col="_lwin",
                 )
-                .drop("_lmax")
+                .withColumn(
+                    self._lsn_col, lsn_str(F.coalesce(F.col("_lwin"), F.lit(0)))
+                )
+                .drop("_lwin")
                 .withColumn(
                     self._bucket_col,
                     self._bucket_of([F.col(k) for k in self.key_cols]),
                 )
-                .persist()
             )
             # the store's publish protocol (streaming/store.py): fresh
             # version dir, atomic manifest swap, one-generation GC
@@ -256,12 +252,9 @@ class CdcApplier:
                 .parquet(self._store.version_path(new_ver))
             )
             # Buckets whose last key was deleted produce zero rows —
-            # they simply drop out of the manifest mapping.
-            present = bounded_partition_values(
-                new_state, self._bucket_col, what="CdcApplier state buckets"
-            )
+            # no dir — and simply drop out of the manifest mapping.
+            present = self._store.written(new_ver)
             self._store.publish(manifest, new_ver, touched, present)
-            new_state.unpersist()
         finally:
             batch.unpersist()
 

@@ -29,6 +29,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from creek_spark import fsio
 
@@ -91,11 +92,7 @@ class VersionedPartitionStore:
     def read_manifest(self) -> dict | None:
         m = fsio.read_json_or_none(self.spark, fsio.join(self.root, MANIFEST))
         if m is None:
-            legacy = [
-                name[len(self._prefix):]
-                for name in fsio.list_names(self.spark, self.root)
-                if name.startswith(self._prefix)
-            ]
+            legacy = self._listed_parts(self.root)
             if legacy:
                 return {"version": 0, self.map_key: {p: "." for p in legacy}}
         return m
@@ -104,15 +101,19 @@ class VersionedPartitionStore:
         """partition value (str) → version dir, as of manifest ``m``."""
         return (m or {}).get(self.map_key, {})
 
-    def read(self, m: dict | None, pvals=None) -> DataFrame | None:
+    def read(
+        self, m: dict | None, pvals=None, schema: T.StructType | None = None
+    ) -> DataFrame | None:
         """The committed partitions of manifest ``m`` — all of them, or
         only those in ``pvals`` that ``m`` holds — as one DataFrame, or
         None when there are none.  Only the selected partition dirs are
-        listed.  allowMissingColumns: after a schema widening,
-        partitions rewritten since carry the new column while untouched
-        ones keep the old schema, and the union fills the gap with
-        NULLs (ADD COLUMN semantics) instead of refusing a
-        half-migrated state."""
+        listed.  ``schema`` (partition column included) skips Parquet
+        schema inference, one Spark job per version dir; columns a file
+        lacks read as NULL.  Without it, allowMissingColumns does the
+        same across version dirs: after a schema widening, partitions
+        rewritten since carry the new column while untouched ones keep
+        the old schema, and the union fills the gap with NULLs (ADD
+        COLUMN semantics) instead of refusing a half-migrated state."""
         pmap = self.parts(m)
         sel = pmap if pvals is None else {str(p) for p in pvals} & pmap.keys()
         by_ver: dict[str, list[str]] = {}
@@ -122,9 +123,11 @@ class VersionedPartitionStore:
         for ver, ps in sorted(by_ver.items()):
             vdir = fsio.join(self.root, ver)
             paths = [fsio.join(vdir, self._prefix + p) for p in sorted(ps)]
+            reader = self.spark.read.option("basePath", vdir)
+            if schema is not None:
+                reader = reader.schema(schema)
             frames.append(
-                self.spark.read.option("basePath", vdir)
-                .parquet(*paths)
+                reader.parquet(*paths)
                 .withColumn(self.part_col, F.col(self.part_col).cast(self.part_type))
             )
         if not frames:
@@ -132,6 +135,18 @@ class VersionedPartitionStore:
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
         )
+
+    def _listed_parts(self, path: str) -> list[str]:
+        return [
+            name[len(self._prefix):]
+            for name in fsio.list_names(self.spark, path)
+            if name.startswith(self._prefix)
+        ]
+
+    def written(self, ver: str) -> list[str]:
+        """Partition values present in version dir ``ver`` — what a
+        write there produced, read off one listing instead of a job."""
+        return self._listed_parts(self.version_path(ver))
 
     def next_version(self, m: dict | None) -> str:
         """The version-dir name the batch after manifest ``m`` writes."""

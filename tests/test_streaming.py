@@ -313,3 +313,78 @@ def test_cdc_stream_restart_across_schema_widening(spark, tmp_path):
         for r in a2.current_state().select("id", "data", "score").collect()
     }
     assert st == {1: ("one", None), 2: ("two-v2", 9), 3: ("three", 30)}
+
+
+def test_cdc_applier_stores_each_keys_max_lsn(spark, tmp_path):
+    """The stored ``_creek_lsn`` is the position a key re-enters the
+    next merge at, so after every batch it must equal the max LSN of
+    that key's changes: under a u_pk across buckets (the new key), an
+    unchanged-TOAST update, a truncate re-inserted in the same batch,
+    and unchanged by an older batch's redelivery."""
+    from tests.fixtures import _lsn, wal_row
+
+    n_buckets = 8
+    buckets = {
+        r["id"]: r["b"]
+        for r in spark.range(1, 20)
+        .select(
+            F.col("id").cast("int").alias("id"),
+            F.pmod(F.xxhash64(F.col("id").cast("int")), F.lit(n_buckets))
+            .cast("int")
+            .alias("b"),
+        )
+        .collect()
+    }
+    a = 1
+    b = next(k for k in buckets if buckets[k] != buckets[a])
+    k2, k3, k4 = [k for k in buckets if k not in (a, b)][:3]
+    applier = CdcApplier(
+        spark, str(tmp_path / "state"), ["id"], ENV_SCHEMA, n_buckets=n_buckets
+    )
+
+    def apply(rows, batch_id):
+        applier.apply_batch(spark.createDataFrame(rows, schema=ENV_SCHEMA), batch_id)
+        return {
+            r["id"]: (r["data"], r["_creek_lsn"])
+            for r in applier.current_state()
+            .select("id", "data", "_creek_lsn")
+            .collect()
+        }
+
+    assert apply(
+        [
+            wal_row(1, "c", after=(a, "a")),
+            wal_row(2, "c", after=(k2, "two")),
+            wal_row(3, "c", after=(k3, "three")),
+            wal_row(4, "u", before=(k2,), after=(k2, "two-v2")),
+        ],
+        0,
+    ) == {a: ("a", _lsn(1)), k2: ("two-v2", _lsn(4)), k3: ("three", _lsn(3))}
+
+    moved = [
+        wal_row(10, "u_pk", before=(a,), after=(b, "moved")),
+        wal_row(11, "u", before=(k3,), after=(k3, None), toast=["data"]),
+    ]
+    assert apply(moved, 1) == {
+        b: ("moved", _lsn(10)),
+        k2: ("two-v2", _lsn(4)),
+        k3: ("three", _lsn(11)),
+    }
+    latest = {
+        b: ("moved", _lsn(10)),
+        k2: ("two-v3", _lsn(12)),
+        k3: ("three", _lsn(11)),
+    }
+    assert apply([wal_row(12, "u", before=(k2,), after=(k2, "two-v3"))], 2) == latest
+    # an older batch redelivered (at-least-once) is a no-op
+    assert apply(moved, 1) == latest
+
+    assert apply(
+        [
+            wal_row(20, "c", after=(k4, "gone")),
+            wal_row(21, "t"),
+            wal_row(22, "c", after=(k2, "two-again")),
+            wal_row(23, "c", after=(k4, "four")),
+        ],
+        3,
+    ) == {k2: ("two-again", _lsn(22)), k4: ("four", _lsn(23))}
