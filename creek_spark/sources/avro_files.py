@@ -38,10 +38,12 @@ from creek_spark.sources.avro_codec import (
     _compile_decoder,
     _compile_encoder,
     _Cursor,
+    dec_block_count,
     dec_bytes,
     dec_long,
     enc_bytes,
     enc_long,
+    pandas_rows,
     struct_to_avro_record,
 )
 
@@ -49,9 +51,13 @@ MAGIC = b"Obj\x01"
 
 
 def avro_type_to_spark(avsc) -> T.DataType:
-    """Reverse of spark_type_to_avro for the subset this engine emits."""
-    if isinstance(avsc, list):  # ["null", X]
-        return avro_type_to_spark(avsc[1])
+    """Reverse of spark_type_to_avro for the subset this engine emits.
+    A union maps only as null plus one type, in either order."""
+    if isinstance(avsc, list):
+        others = [m for m in avsc if m != "null"]
+        if len(avsc) != 2 or len(others) != 1:
+            raise TypeError(f"no Spark mapping for Avro union {avsc!r}")
+        return avro_type_to_spark(others[0])
     prim = {
         "string": T.StringType(),
         "int": T.IntegerType(),
@@ -139,8 +145,7 @@ def write_avro_files(df: DataFrame, path: str) -> int:
         for pdf in batches:
             if len(pdf) and pid is None:
                 pid = int(pdf["_pid"].iloc[0])
-            for row in pdf[cols].itertuples(index=False):
-                rows.append(row._asdict())
+            rows.extend(pandas_rows(pdf, cols))
         if pid is None:
             yield pd.DataFrame({"file": [], "n_rows": []})
             return
@@ -162,35 +167,46 @@ def write_avro_files(df: DataFrame, path: str) -> int:
 
 def parse_container(data: bytes) -> tuple[dict, list]:
     """One container file's bytes → (avro schema, decoded record dicts).
-    Validates magic, codec, and every block's sync marker."""
+    Validates magic, codec, the embedded schema, every block's byte size
+    against the records it holds, and every block's sync marker; a
+    malformed file raises ValueError.  Each record is taken to be at
+    least one byte long, as in every schema this engine writes."""
     import json as _json
 
     if data[:4] != MAGIC:
         raise ValueError("not an Avro object container file (bad magic)")
     c = _Cursor(data, 4)
     meta: dict[str, bytes] = {}
-    while True:
-        n = dec_long(c)
-        if n == 0:
-            break
-        if n < 0:  # size-prefixed block form
-            n = -n
-            dec_long(c)
+    n = dec_block_count(c)
+    while n:
         for _ in range(n):
             k = dec_bytes(c).decode("utf-8")
             meta[k] = dec_bytes(c)
+        n = dec_block_count(c)
     codec = meta.get("avro.codec", b"null")
     if codec != b"null":
         raise ValueError(f"unsupported avro.codec {codec!r} (only null)")
+    if "avro.schema" not in meta:
+        raise ValueError("container file metadata has no avro.schema")
     avsc = _json.loads(meta["avro.schema"].decode("utf-8"))
+    try:
+        dec = _compile_decoder(avsc)
+    except (TypeError, KeyError) as e:
+        raise ValueError(f"unusable avro.schema in container file: {e}") from None
     sync = c.read(16)
-    dec = _compile_decoder(avsc)
     records = []
     while c.pos < len(data):
         count = dec_long(c)
-        dec_long(c)  # byte size (unused with null codec)
+        size = dec_long(c)
+        if not 0 <= count <= size:
+            raise ValueError(f"bad block header: {count} records in {size} bytes")
+        block = _Cursor(c.read(size))
         for _ in range(count):
-            records.append(dec(c))
+            records.append(dec(block))
+        if block.pos != size:
+            raise ValueError(
+                f"block declares {size} bytes, its {count} records use {block.pos}"
+            )
         if c.read(16) != sync:
             raise ValueError("sync marker mismatch (corrupt block)")
     return avsc, records

@@ -3,14 +3,15 @@
 ``sources/golden.py`` proves SCHEMA-level conformance with the reference
 (the exact publish_message Avro JSON + CRC-64-AVRO fingerprint a creek
 Go client expects).  This module closes the loop at the BYTE level: it
-encodes/decodes envelope rows against that schema — including the parts
-the engine's native codec (avro_codec.py) deliberately does not carry —
-so output framed here is decodable by an unmodified creek consumer
-(client.go:265-286 reads magic ``0xC3 01`` + little-endian CRC-64-AVRO
-fingerprint + Avro binary body; hamba/avro fingerprints the Parsing
-Canonical Form, which ``golden.canonical_fingerprint`` reproduces).
+encodes/decodes envelope rows against that schema, so output framed here
+is decodable by an unmodified creek consumer (client.go:265-286 reads
+magic ``0xC3 01`` + little-endian CRC-64-AVRO fingerprint + Avro binary
+body; hamba/avro fingerprints the Parsing Canonical Form, which
+``golden.canonical_fingerprint`` reproduces).
 
-Reference semantics covered beyond the native codec:
+The Avro bodies go through the engine's one schema compiler
+(avro_codec._compile_encoder / _compile_decoder), which covers what the
+golden schema uses:
 
   * enums and NAMED TYPE REFERENCES — ``infinity_modifier`` is declared
     once per record and referenced by fullname afterwards
@@ -24,6 +25,10 @@ Reference semantics covered beyond the native codec:
   * uuid logical strings, decimal-bytes with the relation's typmod
     precision/scale, json/jsonb as bytes
 
+Two things differ from the engine's native frames: a float ``NaN`` is a
+double here, never a null, and ``timestamp-micros`` decodes to naive UTC
+datetimes, as the pgoutput decoder yields them.
+
 Row model: the envelope dicts produced by ``sources/pgoutput.py`` /
 ``types/envelope.py`` (fingerprint, source{...}, op, sent_at,
 before/after as column dicts or None).  ``unchanged_toast`` — the
@@ -35,263 +40,14 @@ resolved before reference-framing).
 
 from __future__ import annotations
 
-import datetime
-import decimal
-import struct as _struct
-from typing import Any, Callable
-
 from creek_spark.sources.avro_codec import (
     MAGIC,
-    _Cursor,
-    dec_bytes,
-    dec_long,
-    enc_bytes,
-    enc_long,
+    _compile_decoder,
+    _compile_encoder,
+    decode_all,
 )
-from creek_spark.sources.golden import (
-    INFINITY,
-    NEGATIVE_INFINITY,
-    canonical_fingerprint_int,
-    publish_message_schema,
-)
+from creek_spark.sources.golden import canonical_fingerprint_int, publish_message_schema
 from creek_spark.types.pgtypes import PGRelation
-
-_EPOCH_DATE = datetime.date(1970, 1, 1)
-_EPOCH_TS = datetime.datetime(1970, 1, 1)
-_INF_STRINGS = {"infinity", "-infinity", "Infinity", "-Infinity"}
-
-
-def _is_inf(v: Any) -> bool:
-    return isinstance(v, str) and v in _INF_STRINGS
-
-
-def _time_micros(v: Any) -> int:
-    if isinstance(v, datetime.time):
-        return (
-            (v.hour * 3600 + v.minute * 60 + v.second) * 1_000_000 + v.microsecond
-        )
-    t = datetime.time.fromisoformat(str(v))
-    return _time_micros(t)
-
-
-def _ts_micros(v: Any) -> int:
-    if isinstance(v, datetime.datetime):
-        return int((v - _EPOCH_TS).total_seconds() * 1_000_000)
-    return int(v)
-
-
-class _Compiler:
-    """Schema → encode/decode closures, with a named-type registry so
-    fullname references ('after.infinity_modifier') resolve to their
-    declaration — the part the native codec doesn't need."""
-
-    def __init__(self):
-        self.named: dict[str, Any] = {}
-
-    # -- encode -------------------------------------------------------
-
-    def encoder(self, schema: Any) -> Callable[[Any, bytearray], None]:
-        if isinstance(schema, str) and schema in self.named:
-            schema = self.named[schema]
-        if isinstance(schema, list):
-            return self._union_encoder(schema)
-        if schema == "null":
-            return lambda v, out: None
-        if schema == "string":
-            return lambda v, out: enc_bytes(str(v).encode("utf-8"), out)
-        if schema in ("int", "long"):
-            return lambda v, out: enc_long(int(v), out)
-        if schema == "float":
-            return lambda v, out: out.extend(_struct.pack("<f", float(v)))
-        if schema == "double":
-            return lambda v, out: out.extend(_struct.pack("<d", float(v)))
-        if schema == "boolean":
-            return lambda v, out: out.append(1 if v else 0)
-        if schema == "bytes":
-            return lambda v, out: enc_bytes(
-                v.encode("utf-8") if isinstance(v, str) else bytes(v), out
-            )
-        t = schema["type"]
-        logical = schema.get("logicalType")
-        if logical == "date":
-            return lambda v, out: enc_long(
-                (v if isinstance(v, datetime.date) else v.date()).toordinal()
-                - _EPOCH_DATE.toordinal(),
-                out,
-            )
-        if logical == "time-micros":
-            return lambda v, out: enc_long(_time_micros(v), out)
-        if logical in ("timestamp-micros", "local-timestamp-micros"):
-            return lambda v, out: enc_long(_ts_micros(v), out)
-        if logical == "uuid":
-            return lambda v, out: enc_bytes(str(v).encode("utf-8"), out)
-        if logical == "decimal":
-            scale = schema["scale"]
-
-            def enc_dec(v, out):
-                unscaled = int(
-                    decimal.Decimal(v)
-                    .scaleb(scale)
-                    .to_integral_value(rounding=decimal.ROUND_HALF_UP)
-                )
-                n = max(1, (unscaled.bit_length() + 8) // 8)
-                enc_bytes(unscaled.to_bytes(n, "big", signed=True), out)
-
-            return enc_dec
-        if t == "enum":
-            self.named[schema["name"]] = schema
-            idx = {s: i for i, s in enumerate(schema["symbols"])}
-            # accept the pg sentinel spelling for the magic symbol
-            idx.setdefault("-infinity", idx.get(NEGATIVE_INFINITY, 1))
-            idx.setdefault("-Infinity", idx.get(NEGATIVE_INFINITY, 1))
-            idx.setdefault("Infinity", idx.get(INFINITY, 0))
-            return lambda v, out: enc_long(idx[v], out)
-        if t == "array":
-            item = self.encoder(schema["items"])
-
-            def enc_arr(v, out):
-                v = list(v)
-                if v:
-                    enc_long(len(v), out)
-                    for x in v:
-                        item(x, out)
-                out.append(0x00)
-
-            return enc_arr
-        if t == "record":
-            self.named[schema["name"]] = schema
-            fields = [(f["name"], self.encoder(f["type"])) for f in schema["fields"]]
-
-            def enc_rec(v, out):
-                get = v.get if isinstance(v, dict) else lambda k: getattr(v, k)
-                for fname, fenc in fields:
-                    fenc(get(fname), out)
-
-            return enc_rec
-        if t in ("string", "int", "long", "float", "double", "boolean", "bytes"):
-            return self.encoder(t)
-        raise TypeError(f"no reference encoder for {schema!r}")
-
-    def _union_encoder(self, schema: list) -> Callable[[Any, bytearray], None]:
-        def resolve(m):
-            return self.named[m] if isinstance(m, str) and m in self.named else m
-
-        def is_enum(m):
-            m = resolve(m)
-            return isinstance(m, dict) and m.get("type") == "enum"
-
-        branches = [(m, self.encoder(m)) for m in schema]
-        null_i = next((i for i, (m, _) in enumerate(branches) if m == "null"), None)
-        enum_i = next((i for i, (m, _) in enumerate(branches) if is_enum(m)), None)
-        value_i = next(
-            (
-                i
-                for i, (m, _) in enumerate(branches)
-                if m != "null" and not is_enum(m)
-            ),
-            None,
-        )
-
-        def enc_union(v, out):
-            if v is None:
-                if null_i is None:
-                    raise ValueError("null for non-nullable union")
-                enc_long(null_i, out)
-            elif enum_i is not None and _is_inf(v):
-                enc_long(enum_i, out)
-                branches[enum_i][1](v, out)
-            else:
-                i = value_i if value_i is not None else enum_i
-                enc_long(i, out)
-                branches[i][1](v, out)
-
-        return enc_union
-
-    # -- decode -------------------------------------------------------
-
-    def decoder(self, schema: Any) -> Callable[[_Cursor], Any]:
-        if isinstance(schema, str) and schema in self.named:
-            schema = self.named[schema]
-        if isinstance(schema, list):
-            branches = [self.decoder(m) for m in schema]
-            return lambda c: branches[dec_long(c)](c)
-        if schema == "null":
-            return lambda c: None
-        if schema == "string":
-            return lambda c: dec_bytes(c).decode("utf-8")
-        if schema in ("int", "long"):
-            return dec_long
-        if schema == "float":
-            return lambda c: _struct.unpack("<f", c.read(4))[0]
-        if schema == "double":
-            return lambda c: _struct.unpack("<d", c.read(8))[0]
-        if schema == "boolean":
-            return lambda c: c.read(1) != b"\x00"
-        if schema == "bytes":
-            return dec_bytes
-        t = schema["type"]
-        logical = schema.get("logicalType")
-        if logical == "date":
-            return lambda c: datetime.date.fromordinal(
-                dec_long(c) + _EPOCH_DATE.toordinal()
-            )
-        if logical == "time-micros":
-
-            def dec_time(c):
-                us = dec_long(c)
-                return datetime.time(
-                    us // 3_600_000_000,
-                    us // 60_000_000 % 60,
-                    us // 1_000_000 % 60,
-                    us % 1_000_000,
-                )
-
-            return dec_time
-        if logical in ("timestamp-micros", "local-timestamp-micros"):
-            return lambda c: _EPOCH_TS + datetime.timedelta(microseconds=dec_long(c))
-        if logical == "uuid":
-            return lambda c: dec_bytes(c).decode("utf-8")
-        if logical == "decimal":
-            scale = schema["scale"]
-
-            def dec_dec(c):
-                raw = dec_bytes(c)
-                return decimal.Decimal(
-                    int.from_bytes(raw, "big", signed=True)
-                ).scaleb(-scale)
-
-            return dec_dec
-        if t == "enum":
-            self.named[schema["name"]] = schema
-            syms = schema["symbols"]
-            # surface the magic symbol as the pg sentinel
-            out_syms = [
-                "-infinity" if s == NEGATIVE_INFINITY else s for s in syms
-            ]
-            return lambda c: out_syms[dec_long(c)]
-        if t == "array":
-            item = self.decoder(schema["items"])
-
-            def dec_arr(c):
-                out = []
-                n = dec_long(c)
-                while n != 0:
-                    if n < 0:
-                        dec_long(c)  # block byte size — skip
-                        n = -n
-                    for _ in range(n):
-                        out.append(item(c))
-                    n = dec_long(c)
-                return out
-
-            return dec_arr
-        if t == "record":
-            self.named[schema["name"]] = schema
-            fields = [(f["name"], self.decoder(f["type"])) for f in schema["fields"]]
-            return lambda c: {fname: fdec(c) for fname, fdec in fields}
-        if t in ("string", "int", "long", "float", "double", "boolean", "bytes"):
-            return self.decoder(t)
-        raise TypeError(f"no reference decoder for {schema!r}")
 
 
 class ReferenceWireCodec:
@@ -303,10 +59,8 @@ class ReferenceWireCodec:
     def __init__(self, relation: PGRelation):
         self.schema = publish_message_schema(relation)
         self.fingerprint_int = canonical_fingerprint_int(self.schema)
-        comp = _Compiler()
-        self._enc = comp.encoder(self.schema)
-        comp2 = _Compiler()
-        self._dec = comp2.decoder(self.schema)
+        self._enc = _compile_encoder(self.schema)
+        self._dec = _compile_decoder(self.schema, tz_aware=False)
 
     def encode(self, row: dict) -> bytes:
         out = bytearray(MAGIC)
@@ -315,6 +69,8 @@ class ReferenceWireCodec:
         return bytes(out)
 
     def decode(self, frame: bytes) -> dict:
+        """One frame → its row dict; a malformed frame, or bytes after
+        its body, raise ValueError."""
         if frame[:2] != MAGIC:
             raise ValueError("bad single-object magic")
         fp = int.from_bytes(frame[2:10], "little")
@@ -323,4 +79,4 @@ class ReferenceWireCodec:
                 f"fingerprint mismatch: frame {fp:#x} vs schema "
                 f"{self.fingerprint_int:#x}"
             )
-        return self._dec(_Cursor(frame, 10))
+        return decode_all(self._dec, frame, 10)

@@ -1,9 +1,10 @@
 """Reference-exact `publish_message` Avro schema generation + Avro
 Parsing-Canonical-Form fingerprinting.
 
-The engine's native envelope schema (types/envelope.py → avro_codec.py)
-carries one documented extension (`unchanged_toast`).  THIS module
-produces the byte-level schema a creek Go CLIENT expects — the exact
+The engine's native envelope schema (types/envelope.py →
+avro_codec.envelope_avro_schema) carries one documented extension
+(`unchanged_toast`).  THIS module produces the byte-level schema a creek
+Go CLIENT expects — the exact
 JSON the reference pins as an inline golden
 (/root/reference/integration_tests/listen_test.go:208-769) — so
 interop with existing consumers is provable:
@@ -23,6 +24,11 @@ interop with existing consumers is provable:
   * CRC-64-AVRO fingerprints over the Avro spec's Parsing Canonical
     Form — the same bytes hamba/avro's FingerprintUsing(CRC64Avro)
     hashes (listen_test.go:761-765).
+
+Both schemas are encoded and decoded by the one Avro compiler in
+avro_codec.py; creek_wire.ReferenceWireCodec frames this one.  The
+infinity symbols below are what that compiler maps the Postgres
+``±infinity`` spellings onto, in an enum that carries them.
 """
 
 from __future__ import annotations

@@ -14,11 +14,13 @@ Two payload codecs ship:
     same frame layout — the fast default when both ends are this engine.
   * **avro** (sources/avro_codec.py): spec-exact Avro binary bodies in
     single-object encoding, byte-compatible with the reference's
-    `avro.Marshal` output shape (wal.go:52-58) — a pure-Python
-    from-spec codec run via Arrow-batched mapInPandas, since the
-    spark-avro connector jar is absent here (from_avro/to_avro raise
-    AVRO_NOT_LOADED).  Where the jar is present the frame layout admits
-    to_avro/from_avro directly.
+    `avro.Marshal` output shape (wal.go:52-58) — the engine's one
+    pure-Python from-spec Avro compiler run via Arrow-batched
+    mapInPandas, since the spark-avro connector jar is absent here
+    (from_avro/to_avro raise AVRO_NOT_LOADED).  Its decode handles every
+    registry generation in one pass onto the superset envelope.  Where
+    the jar is present the frame layout admits to_avro/from_avro
+    directly.
 `encode_envelope` / `decode_envelope` dispatch between them.
 """
 
@@ -128,8 +130,9 @@ def decode_envelope(
 ) -> DataFrame | dict[str, DataFrame]:
     """Frames → envelope rows.  json: split/quarantine then per-generation
     from_json (returns {fingerprint: DataFrame}); avro: fingerprint-
-    dispatched binary decode (returns one DataFrame).  For avro,
-    ``registry`` maps fingerprint → ROW struct."""
+    dispatched binary decode onto the superset of the generations'
+    envelopes (returns one DataFrame).  For avro, ``registry`` maps
+    fingerprint → ROW struct."""
     if codec == "avro":
         from creek_spark.sources.avro_codec import decode_envelope_avro
 

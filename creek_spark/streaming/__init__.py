@@ -51,20 +51,6 @@ def read_envelope_stream(
     return reader.parquet(path)
 
 
-def stream_wal_from(
-    stream: DataFrame, timestamp=None, lsn: str | None = None
-) -> DataFrame:
-    """StreamWALFrom (client.go:227-294) on the streaming DataFrame —
-    same predicates as the batch variant; Catalyst pushes them into the
-    file-source scan."""
-    out = stream
-    if timestamp is not None:
-        out = out.where(F.col("source.tx_at") >= F.lit(timestamp))
-    if lsn is not None:
-        out = out.where(lsn_num(F.col("source.lsn")) > lsn_num(F.lit(lsn)))
-    return out
-
-
 class CdcApplier:
     """foreachBatch sink: maintains materialized table state under
     ``state_dir`` by merging each micro-batch of envelope rows.

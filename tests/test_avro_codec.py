@@ -253,8 +253,6 @@ def test_schema_evolution_two_generations_avro(spark):
     fingerprint-split decode + reconcile surfaces the superset columns,
     old rows null for the added column — the Avro-wire mirror of
     tests/test_wire.py's JSON evolution case."""
-    from creek_spark.sources.avro_codec import decode_envelope_avro_evolved
-
     gen1 = ROW_SCHEMA  # (id, data)
     gen2 = T.StructType(
         list(ROW_SCHEMA.fields)
@@ -279,7 +277,7 @@ def test_schema_evolution_two_generations_avro(spark):
     frames = encode_envelope_avro(env1, gen1).unionByName(
         encode_envelope_avro(env2, gen2)
     )
-    out = decode_envelope_avro_evolved(frames, {fp1: gen1, fp2: gen2})
+    out = decode_envelope_avro(frames, {fp1: gen1, fp2: gen2})
     rows = {r["source"]["lsn"]: r for r in out.collect()}
     assert set(out.select("after.*").columns) == {"id", "data", "extra"}
     assert rows["0/63"]["after"]["extra"] == 42
@@ -287,3 +285,88 @@ def test_schema_evolution_two_generations_avro(spark):
     gen1_lsn = env1.collect()[0]["source"]["lsn"]
     assert rows[gen1_lsn]["after"]["extra"] is None
     assert rows[gen1_lsn]["after"]["id"] == 1
+
+
+def _two_generations(spark):
+    """(frames, gen1, gen2): one gen1 insert and one gen2 insert that
+    sets the column gen2 added."""
+    import datetime as _dt
+
+    gen1 = ROW_SCHEMA
+    gen2 = T.StructType(list(ROW_SCHEMA.fields) + [T.StructField("email", T.StringType(), True)])
+    t0 = _dt.datetime(2024, 6, 1, tzinfo=_dt.timezone.utc)
+    src = ("creek", t0, "db", "public", "other")
+
+    def env(gen, lsn, after):
+        return spark.createDataFrame(
+            [("g", (*src, 1, lsn), "c", t0, None, after, None)], schema=envelope_schema(gen)
+        )
+
+    frames = encode_envelope_avro(env(gen1, "0/1", (1, "a")), gen1).unionByName(
+        encode_envelope_avro(env(gen2, "0/2", (2, "b", "b@x")), gen2)
+    )
+    return frames, gen1, gen2
+
+
+def test_wire_decode_envelope_avro_keeps_added_column(spark):
+    """The registry path (`wire.decode_envelope(codec="avro")`, which
+    `Engine.decode_wal` takes) decodes every generation onto the
+    superset envelope: the newer generation's added column survives."""
+    from creek_spark.sources.wire import decode_envelope
+
+    frames, gen1, gen2 = _two_generations(spark)
+    registry = {fingerprint_schema(gen1): gen1, fingerprint_schema(gen2): gen2}
+    out = decode_envelope(frames, registry, "avro")
+    assert out.schema["after"].dataType.names == ["id", "data", "email"]
+    rows = {r["source"]["lsn"]: r["after"] for r in out.collect()}
+    assert rows["0/2"]["email"] == "b@x"
+    assert rows["0/1"]["email"] is None and rows["0/1"]["data"] == "a"
+
+
+def test_decode_envelope_avro_output_schema(spark):
+    """One generation: exactly its envelope.  Generations that disagree
+    on a column's type: ValueError before any job runs."""
+    frames, gen1, _ = _two_generations(spark)
+    fp1 = fingerprint_schema(gen1)
+    assert decode_envelope_avro(frames, {fp1: gen1}).schema == envelope_schema(gen1)
+    clash = T.StructType(
+        [ROW_SCHEMA["id"], T.StructField("data", T.LongType(), True)]
+    )
+    import pytest
+
+    with pytest.raises(ValueError, match="after.data"):
+        decode_envelope_avro(frames, {fp1: gen1, fingerprint_schema(clash): clash})
+
+
+def test_general_unions():
+    """Unions in any branch order and with any number of branches."""
+    import pytest
+
+    three = ["null", "long", "string"]
+    assert _compile_decoder(three)(_Cursor(b"\x04\x04hi")) == "hi"
+    assert _compile_decoder(three)(_Cursor(b"\x02\x0a")) == 5
+    assert _enc(three, 5) == b"\x02\x0a"
+    assert _enc(three, None) == b"\x00"
+    rev = ["string", "null"]
+    assert _compile_decoder(rev)(_Cursor(b"\x02")) is None
+    assert _compile_decoder(rev)(_Cursor(b"\x00\x04hi")) == "hi"
+    assert _enc(rev, None) == b"\x02" and _enc(rev, "hi") == b"\x00\x04hi"
+    with pytest.raises(ValueError, match="non-nullable"):
+        _enc(["long", "string"], None)
+
+
+def test_enum_symbols_are_exact():
+    """Only an enum carrying the infinity symbols takes the Postgres
+    ±infinity spellings; any other unknown symbol is refused."""
+    import pytest
+
+    from creek_spark.sources.golden import INFINITY, NEGATIVE_INFINITY
+
+    op_enum = {"type": "enum", "name": "op", "symbols": ["c", "u", "u_pk", "d", "t", "r"]}
+    for bad in ("-infinity", "Infinity", "x"):
+        with pytest.raises(ValueError, match="not a symbol"):
+            _enc(op_enum, bad)
+    inf = {"type": "enum", "name": "inf", "symbols": [INFINITY, NEGATIVE_INFINITY]}
+    assert _enc(inf, "-infinity") == _enc(inf, "-Infinity") == b"\x02"
+    assert _enc(inf, "Infinity") == _enc(inf, "infinity") == b"\x00"
+    assert _compile_decoder(inf)(_Cursor(b"\x02")) == "-infinity"

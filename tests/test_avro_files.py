@@ -111,6 +111,16 @@ def test_avro_type_to_spark_subset():
     )
 
 
+def test_avro_type_to_spark_unions():
+    """null plus one type maps in either order; any other union is
+    refused by name."""
+    assert avro_type_to_spark(["string", "null"]) == T.StringType()
+    assert avro_type_to_spark(["null", "string"]) == T.StringType()
+    for union in (["null", "long", "string"], ["long", "string"], ["null"]):
+        with pytest.raises(TypeError, match="union"):
+            avro_type_to_spark(union)
+
+
 def test_formats_route_avro_jar_free(spark, tmp_path):
     """read_files/write_files with fmt='avro' fall back to the from-spec
     container path when the connector jar is absent."""

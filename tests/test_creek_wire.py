@@ -145,6 +145,24 @@ def test_infinity_temporals_use_enum_branch():
     assert NEGATIVE_INFINITY.startswith("negative_infinity")
 
 
+def test_infinity_spelling_is_refused_outside_the_infinity_enum():
+    """'-infinity' names a symbol of infinity_modifier only: as an op it
+    is refused rather than written as some other op's index."""
+    import pytest
+
+    codec = ReferenceWireCodec(_rel())
+    with pytest.raises(ValueError, match="not a symbol"):
+        codec.encode(_row(op="-infinity", after=FULL_AFTER))
+
+
+def test_float_nan_stays_a_double():
+    import math
+
+    codec = ReferenceWireCodec(_rel())
+    got = codec.decode(codec.encode(_row(after=dict(FULL_AFTER, score=float("nan")))))
+    assert math.isnan(got["after"]["score"])
+
+
 def test_before_is_keys_only_and_delete_round_trips():
     codec = ReferenceWireCodec(_rel())
     row = _row(op="d", before={"id": 9}, after=None)

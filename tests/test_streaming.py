@@ -84,12 +84,14 @@ def test_tumbling_counts_stream(spark, tmp_path):
 
 
 def test_stream_wal_from_filters(spark, tmp_path):
-    from creek_spark.streaming import stream_wal_from
+    """The batch resume filter `wal_from` applies to a streaming
+    DataFrame unchanged."""
+    from creek_spark.operators.cdc import wal_from
 
     src = str(tmp_path / "wal3")
     _write_batch(spark, other_wal_events(), src)
     stream = read_envelope_stream(spark, src, ENV_SCHEMA)
-    filtered = stream_wal_from(stream, lsn="0/8")
+    filtered = wal_from(stream, lsn="0/8")
     assert filtered.isStreaming
     # run it through a memory sink to observe the predicate applied
     q = (
